@@ -21,11 +21,9 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // Store prebuild FIRST, single-threaded: the ensure* builders are
     // check-then-write and two concurrent queries racing the same build
-    // would double-write it. After this, every store access is a read.
-    try StorePrebuild.all(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[verify] store prebuild failed: ${e.getMessage}")
-    }
+    // would double-write it. After this, every store access is a read;
+    // a failed prebuild fails the run before the pool starts.
+    StorePrebuild.all(spark, sfDir)
     // Overlap independent query dumps (guide §2.6): each query writes its
     // own directory and shares no mutable state, so a small pool lets the
     // next dump's jobs back-fill the current one's stage tails — the

@@ -240,7 +240,7 @@ object CurationQueries {
       .select(explode(graft.functions.WsTokens.ws_tokens(col("text"))).as("sw"))
       .filter(length(col("sw")) >= 2)
       .groupBy("sw").agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     for (k <- 1 to kMax) {
       val top = vocab.filter(length(col("sw")) >= 2)
@@ -259,7 +259,7 @@ object CurationQueries {
             org.apache.spark.sql.functions.replace(
               col("sw"), lit(merges.last._2), lit(k.toChar.toString)).as("sw"),
             col("n"))
-          .localCheckpoint(eager = false)
+          .localCheckpoint()
     }
     merges.toSeq
   }
@@ -493,15 +493,15 @@ object CurationQueries {
           expr("length(text) div 100").as("len_bucket"))
       val g0 = q.withColumn("n0",
         count(lit(1)).over(Window.partitionBy("lang", "source", "len_bucket")))
-        .localCheckpoint(eager = false) // level-0 report + the remainder both read it
+        .localCheckpoint() // level-0 report + the remainder both read it
       val r0 = g0.filter(col("n0") < 5)
       val g1 = r0.withColumn("n1",
         count(lit(1)).over(Window.partitionBy("lang", "source")))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val r1 = g1.filter(col("n1") < 5)
       val g2 = r1.withColumn("n2",
         count(lit(1)).over(Window.partitionBy("source")))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       def lv(df: org.apache.spark.sql.DataFrame, level: Int,
           grpExpr: String, nCol: String, kept: Boolean) =
         df.filter(if (kept) col(nCol) >= 5 else col(nCol) < 5)
@@ -604,7 +604,7 @@ object CurationQueries {
         .select(col("lang"), col("source"),
           expr(s"((rn - 1) * 10) div ${n}L + 1").as("bucket"))
       val gb = b.groupBy("lang", "source", "bucket").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val glob = gb.groupBy("bucket").agg(sum("cnt").as("cnt"))
       val grp = gb.groupBy("lang", "source").agg(sum("cnt").as("n_g"))
       val ks = s.range(1, 10).select(col("id").as("k"))
@@ -1024,7 +1024,7 @@ object CurationQueries {
         docs.join(broadcast(blocklist), Seq("source"), "left_anti")
           .filter(col("doc_id") % 97 =!= 0)
           .select("doc_id", "text", "lang"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val contaminated = decontaminate(
         corpus, docs.filter(col("doc_id") % 97 === 0), minShared = 20)
         .select(col("train_doc").as("doc_id")).distinct()
@@ -1433,7 +1433,7 @@ object CurationQueries {
           explode(array_distinct(expr(graft.operators.TextQueries.toksExpr))).as("t"))
       val qt = toks.filter(col("doc_id") % 97 === 0 && col("doc_id") < 10000)
         .select(col("doc_id").as("qid"), col("t"))
-        .localCheckpoint(eager = false) // bounded probe side, used by cand AND verify
+        .localCheckpoint() // bounded probe side, used by cand AND verify
       val ct = toks.filter(col("doc_id") % 97 =!= 0)
       val df = ct.groupBy("t").agg(count(lit(1)).as("df"))
       val sz = toks.groupBy("doc_id").agg(count(lit(1)).as("n"))
@@ -1878,13 +1878,13 @@ object CurationQueries {
       val w = t.select(col("source"), col("n"),
           expr("CAST(floor(sqrt(CAST(n * sxx - sx * sx AS DOUBLE))) AS BIGINT)")
             .as("wt"))
-        .localCheckpoint(eager = false) // the total and the quota rows both read it
+        .localCheckpoint() // the total and the quota rows both read it
       val tot = w.agg(sum("wt").cast("long").as("tw"))
       val q = w.crossJoin(broadcast(tot))
         .select(col("source"), col("n"), col("wt"),
           expr("CAST((1000 * wt) div tw AS BIGINT)").as("base"),
           expr("CAST((1000 * wt) % tw AS BIGINT)").as("rem"))
-        .localCheckpoint(eager = false) // leftover sum + ranking share it
+        .localCheckpoint() // leftover sum + ranking share it
       val leftover = q.agg((lit(1000L) - sum("base")).as("leftover"))
       // source-taxonomy-bounded window — a global ORDER BY is safe here
       q.withColumn("rk", row_number().over(
@@ -1917,13 +1917,13 @@ object CurationQueries {
         .select(col("source"),
           graft.functions.WsTokenCount.ws_token_count(col("text")).cast("long").as("n"))
         .groupBy("source").agg(sum("n").as("tokens"))
-        .localCheckpoint(eager = false) // two consumers: the total and the quota rows
+        .localCheckpoint() // two consumers: the total and the quota rows
       val tot = t.agg(sum("tokens").cast("long").as("tt"))
       val q = t.crossJoin(broadcast(tot))
         .select(col("source"), col("tokens"),
           expr("CAST((CAST(1000000 AS DECIMAL(38,0)) * tokens) div tt AS BIGINT)").as("base"),
           expr("CAST((CAST(1000000 AS DECIMAL(38,0)) * tokens) % tt AS BIGINT)").as("rem"))
-        .localCheckpoint(eager = false) // two consumers: the leftover sum and the ranking
+        .localCheckpoint() // two consumers: the leftover sum and the ranking
       val leftover = q.agg((lit(1000000L) - sum("base")).as("leftover"))
       // source-taxonomy-bounded window (≤ thousands of rows at any
       // corpus size) — a global ORDER BY here is safe by construction
@@ -2090,7 +2090,7 @@ object CurationQueries {
           explode(graft.functions.WsTokens.ws_tokens(col("text"))).as("token"))
         .select(col("doc_id"), col("lang"),
           (graft.functions.Md5Head60.md5_head60(col("token")) % 1024).as("b"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val rc = tb.groupBy("b").agg(length(bin(count(lit(1)))).cast("long").as("b_raw"))
       val tc = tb.filter(col("lang") === "en")
         .groupBy("b").agg(length(bin(count(lit(1)))).cast("long").as("b_tgt"))
@@ -2392,7 +2392,7 @@ object CurationQueries {
       val t = documents(s, d)
         .select(col("doc_id"), col("n_chars").cast("long").as("x"),
           size(array_distinct(expr(TextQueries.toksExpr))).cast("long").as("y"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val px = t.groupBy("x").agg(max(col("y")).as("my"))
       val thrW = Window.orderBy(col("x"))
         .rangeBetween(1, Window.unboundedFollowing)
@@ -2445,7 +2445,7 @@ object CurationQueries {
         |FROM th t JOIN tst s ON s.lang = t.lang
         |LEFT JOIN cov c ON c.lang = t.lang
         |ORDER BY t.lang""".stripMargin) { (s, d) =>
-      val docs = documents(s, d).localCheckpoint(eager = false)
+      val docs = documents(s, d).localCheckpoint()
       val cal = docs.filter(col("doc_id") % 2 === 0)
         .select(col("lang"), col("n_chars").as("score"), col("doc_id"))
       val qi = cal.groupBy("lang").agg(count(lit(1)).as("n_cal"))
@@ -2560,7 +2560,7 @@ object CurationQueries {
         |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
       val tk = TextQueries.spread(documents(s, d))
         .select(col("doc_id"), expr(TextQueries.toksExpr).as("tk"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val train = tk.filter(col("doc_id") % 10 =!= 0)
       val ttoks = train.select(explode(col("tk")).as("t"))
       val uni = ttoks.groupBy("t").agg(count(lit(1)).as("n"))
@@ -2660,7 +2660,7 @@ object CurationQueries {
       val dd = documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"),
           expr("n_chars div 100").as("band"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val fl = pairs
         .join(dd.select(col("doc_id").as("doc_a"), col("lang").as("la"),
           col("source").as("sa"), col("band").as("ba")), Seq("doc_a"))
@@ -2670,7 +2670,7 @@ object CurationQueries {
           when(col("la") === col("lb"), 1L).otherwise(0L).as("agree_lang"),
           when(col("sa") === col("sb"), 1L).otherwise(0L).as("agree_source"),
           when(col("ba") === col("bb"), 1L).otherwise(0L).as("agree_band"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val mm = fl.agg(count(lit(1)).as("nm"), sum("agree_lang").as("am1"),
         sum("agree_source").as("am2"), sum("agree_band").as("am3"))
       def auOf(field: String, out: String) =

@@ -249,7 +249,7 @@ object DriftQueries {
       val pw = ab.select(col("p"),
         expr("""CAST((CAST(a AS DECIMAL(38,0)) * a + CAST(b AS DECIMAL(38,0)) * b)
                |  div 1000000000000 AS BIGINT)""".stripMargin).as("power_u"))
-        .localCheckpoint(eager = false) // 5 rows; feeds the max AND the output
+        .localCheckpoint() // 5 rows; feeds the max AND the output
       val mx = pw.agg(max("power_u").as("m"))
       pw.crossJoin(broadcast(mx))
         .select(col("p").as("period"), col("power_u"),
@@ -303,7 +303,7 @@ object DriftQueries {
       val st = dd.agg(count(lit(1)).as("n"), sum("c").cast("long").as("t"))
       val y = dd.crossJoin(broadcast(st))
         .select(col("day"), (col("n") * col("c") - col("t")).as("y"), col("n"))
-        .localCheckpoint(eager = false) // bounded calendar rows; self-joined per lag
+        .localCheckpoint() // bounded calendar rows; self-joined per lag
       val den = y.agg(expr("CAST(sum(CAST(y AS DECIMAL(38,0)) * y) AS DECIMAL(38,0))").as("d2"))
       val lags = (1L to 7L).toDF("lag")
       val num = lags.crossJoin(y.select(col("day"), col("y").as("ya")))
@@ -317,7 +317,7 @@ object DriftQueries {
       val terms = r.crossJoin(broadcast(st))
         .select(col("lag"), col("acf_ppm"),
           expr("(acf_ppm * acf_ppm) div (n - lag)").as("term"))
-        .localCheckpoint(eager = false) // 7 rows; feeds Q AND the output
+        .localCheckpoint() // 7 rows; feeds Q AND the output
       val q = terms.crossJoin(broadcast(st))
         .groupBy("n")
         .agg(expr("CAST((n * (n + 2) * sum(term)) div 1000000 AS BIGINT)").as("q_micro"))
@@ -382,7 +382,7 @@ object DriftQueries {
           .cast("long").as("diff"))
       val nz = dd.filter(col("diff") =!= 0L)
         .select(col("diff"), abs(col("diff")).as("ad"))
-        .localCheckpoint(eager = false) // bounded calendar rows; ranked + joined
+        .localCheckpoint() // bounded calendar rows; ranked + joined
       val grp = nz.groupBy("ad").agg(count(lit(1)).as("t"))
       val rk = grp.withColumn("rank2",
         lit(2) * (sum("t").over(Window.orderBy("ad")) - col("t")) + col("t") + 1)
@@ -448,13 +448,13 @@ object DriftQueries {
       val g = dd
         .withColumn("rk", row_number().over(Window.orderBy("day")))
         .withColumn("nn", count(lit(1)).over(Window.partitionBy()))
-        .localCheckpoint(eager = false) // bounded calendar rows; self-joined
+        .localCheckpoint() // bounded calendar rows; self-joined
       val p = g.as("a").join(g.select(col("rk").as("brk"), col("y").as("yhat")),
           col("brk") === col("rk") - 7)
         .select(col("rk"), col("day"), col("y"), col("yhat"), col("nn"),
           when(lit(5) * col("rk") <= lit(4) * col("nn"), 1L).otherwise(0L)
             .as("is_train"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val res = p.filter(col("is_train") === 1).select((col("y") - col("yhat")).as("r"))
       val nr = res.agg(count(lit(1)).as("n"))
       val o = res.withColumn("rr", row_number().over(Window.orderBy("r")))
@@ -626,7 +626,7 @@ object DriftQueries {
         .unionByName(lab.select(lit("prio").as("feature"), col("f_prio").as("v"), col("pos")))
       val ct = longf.groupBy("feature", "v")
         .agg(count(lit(1)).as("n"), sum("pos").cast("long").as("p"))
-        .localCheckpoint(eager = false) // bounded contingency table, 3 consumers
+        .localCheckpoint() // bounded contingency table, 3 consumers
       val tot = ct.filter(col("feature") === "lines")
         .agg(sum("n").cast("long").as("tn"), sum("p").cast("long").as("tp"))
       val cand = ct.select(col("feature"), col("v").as("thr"))
@@ -644,7 +644,7 @@ object DriftQueries {
                  |        + ((tn - nl) - (tp - pl)) * ((tn - nl) - (tp - pl))))
                  |      div ((tn - nl) * tn) AS BIGINT)
                  |ELSE NULL END""".stripMargin).as("purity_micro"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val b = sc.agg(max("purity_micro").as("best"))
       sc.crossJoin(broadcast(b))
         .select(col("feature"), col("thr").cast("long").as("thr"),
@@ -785,7 +785,7 @@ object DriftQueries {
         .agg(expr("(1000000 * CAST(sum(pos) AS BIGINT)) div count(*)").as("p"))
       val te = lab.filter(col("is_train") === 0).groupBy("bin")
         .agg(count(lit(1)).as("n"), sum("pos").cast("long").as("pos"))
-      val joined = te.join(tr, Seq("bin")).localCheckpoint(eager = false) // bounded bins
+      val joined = te.join(tr, Seq("bin")).localCheckpoint() // bounded bins
       val tot = joined.agg(sum("n").cast("long").as("nn"),
         sum("pos").cast("long").as("pp"))
       val terms = joined.crossJoin(broadcast(tot))
@@ -800,7 +800,7 @@ object DriftQueries {
           expr("""n * CAST(p AS DECIMAL(38,0)) * p
                  |  - 2 * CAST(p AS DECIMAL(38,0)) * 1000000 * pos
                  |  + CAST(1000000000000 AS DECIMAL(38,0)) * pos""".stripMargin).as("bs_k"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val g = terms.crossJoin(broadcast(tot))
         .agg(expr("CAST(sum(rel_k) div max(nn) AS BIGINT)").as("rel_ppm2"),
           expr("CAST(sum(res_k) div max(nn) AS BIGINT)").as("res_ppm2"),
@@ -950,7 +950,7 @@ object DriftQueries {
       val b = lab.groupBy("bin")
         .agg(sum("pos").cast("long").as("n_p"),
           sum(expr("1 - pos")).cast("long").as("n_n"))
-        .localCheckpoint(eager = false) // bounded bins; feeds terms AND the total
+        .localCheckpoint() // bounded bins; feeds terms AND the total
       val tot = b.agg(sum("n_p").cast("long").as("np"),
         sum("n_n").cast("long").as("nn"))
       val terms = b.crossJoin(broadcast(tot))
@@ -967,7 +967,7 @@ object DriftQueries {
                  |      AS BIGINT))
                  |    div (CAST(np AS DECIMAL(38,0)) * nn) AS BIGINT)
                  |ELSE NULL END""".stripMargin).as("iv_term_micro"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val g = terms.agg(sum("iv_term_micro").cast("long").as("iv_micro"),
         count(when(col("iv_term_micro").isNull, 1)).cast("long").as("n_skipped"))
       terms.crossJoin(broadcast(g))
@@ -1086,7 +1086,7 @@ object DriftQueries {
       val c = types.crossJoin(broadcast(grid))
         .join(x, Seq("event_type", "day"), "left")
         .select(col("event_type"), col("day"), coalesce(col("c"), lit(0L)).as("c"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val stats = c.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("c").as("sx"), sum(col("c") * col("c")).as("sxx"))
       val a = c.toDF("t1", "day", "ca")
@@ -1137,7 +1137,7 @@ object DriftQueries {
         .select(col("source"),
           length(bin(size(expr(TextQueries.toksExpr)).cast("long"))).cast("long").as("bucket"))
         .groupBy("source", "bucket").agg(count(lit(1)).as("o"))
-        .localCheckpoint(eager = false) // taxonomy × ~40 buckets
+        .localCheckpoint() // taxonomy × ~40 buckets
       val r = o.groupBy("source").agg(sum("o").as("r"))
       val c = o.groupBy("bucket").agg(sum("o").as("c"))
       val tot = o.agg(sum("o").as("n"))
@@ -1195,7 +1195,7 @@ object DriftQueries {
         .select(col("event_type"),
           expr(s"(${graft.util.Tables.epochUsFloorSql}) div 3600000000").as("hr"))
         .groupBy("event_type", "hr").agg(count(lit(1)).as("c"))
-        .localCheckpoint(eager = false) // hour-cardinality, consumed four times
+        .localCheckpoint() // hour-cardinality, consumed four times
       val w = Window.partitionBy("event_type")
       def lowerMedian(df: org.apache.spark.sql.DataFrame, valueCol: String,
           outCol: String): org.apache.spark.sql.DataFrame =
@@ -1398,7 +1398,7 @@ object DriftQueries {
         .select(col("user_id"), expr(s"($us) div 86400000000").as("day"),
           col("event_type"))
         .distinct()
-        .localCheckpoint(eager = false) // basket-cardinality; feeds nb, tc, and the pair join
+        .localCheckpoint() // basket-cardinality; feeds nb, tc, and the pair join
       val nb = b.select("user_id", "day").distinct().agg(count(lit(1)).as("n"))
       val tc = b.groupBy("event_type").agg(count(lit(1)).as("c"))
       val pairs = b.select(col("user_id"), col("day"), col("event_type").as("ta"))
@@ -1610,11 +1610,11 @@ object DriftQueries {
       val c = events(s, d)
         .select(expr(s"(($us) div 86400000000)").as("day"))
         .groupBy("day").agg(count(lit(1)).as("c"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val st = c.agg(count(lit(1)).as("n"), sum("c").as("t"))
       val y = c.crossJoin(broadcast(st))
         .select(col("day"), (col("n") * col("c") - col("t")).as("y"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val den = y.agg(sum(expr("CAST(y AS DECIMAL(38,0)) * y")).as("d2"))
       val lags = Seq(1L, 7L).toDF("lag")
       val num = broadcast(lags).crossJoin(y.select(col("day"), col("y").as("ya")))
@@ -1703,9 +1703,8 @@ object DriftQueries {
       val tok = documents(s, d).filter(col("source").isNotNull)
         .select(col("source"),
           explode(expr(graft.operators.TextQueries.toksExpr)).as("t"))
-        .localCheckpoint(eager = false)
       val st = tok.groupBy("source", "t").agg(count(lit(1)).as("n_si"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val ns = st.groupBy("source").agg(sum("n_si").as("n_s"))
       val g = st.groupBy("t").agg(sum("n_si").as("n_i"))
       val nn = g.agg(sum("n_i").as("n"))
@@ -1864,7 +1863,7 @@ object DriftQueries {
       val uk = broadcast(looks).crossJoin(ud)
         .groupBy("k", "cut", "user_id", "arm")
         .agg(sum(when(col("day") <= col("cut"), col("np")).otherwise(0L)).as("np"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val mt = uk.groupBy("k").agg(count(lit(1)).as("nu"), sum("np").as("tp"))
       val cm = uk.join(broadcast(mt), Seq("k"))
         .select(col("k"), col("cut"), col("arm"),
@@ -2131,7 +2130,7 @@ object DriftQueries {
           .otherwise(col("l_partkey")).as("fk_part"),
         when((col("l_orderkey") * 10 + col("l_linenumber")) % 509 === 0, -1L)
           .otherwise(col("l_suppkey")).as("fk_supp"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val os = orders(s, d).select(col("o_orderkey"),
         when(col("o_orderkey") % 499 === 0, -1L).otherwise(col("o_custkey"))
           .as("fk_cust"))
@@ -2294,7 +2293,7 @@ object DriftQueries {
       val c = documents(s, d)
         .filter(col("lang").isNotNull && col("source").isNotNull)
         .groupBy("lang", "source").agg(count(lit(1)).as("n_ij"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val ml = c.groupBy("lang").agg(sum("n_ij").as("n_i"))
       val ms = c.groupBy("source").agg(sum("n_ij").as("n_j"))
       val nn = c.agg(sum("n_ij").as("n"))
@@ -2305,7 +2304,7 @@ object DriftQueries {
           expr("""CAST(round(1000000 * round(ln(
                  |  CAST(n_ij * n AS DOUBLE) / (n_i * n_j)), 6)) AS BIGINT)""".stripMargin))
         .withColumn("term_micro", expr("(n_ij * pmi_micro) div n"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val tot = cell.agg(sum("term_micro").as("mi_total_micro"))
       cell.crossJoin(broadcast(tot))
         .select(col("lang"), col("source"), col("n_ij"), col("pmi_micro"),
@@ -2416,7 +2415,7 @@ object DriftQueries {
           lead(col("event_type"), 1).over(w).as("dst"))
         .filter(col("dst").isNotNull)
         .groupBy("src", "dst").agg(count(lit(1)).as("n"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val rt = c.groupBy("src").agg(sum("n").as("n_src"))
       val nn = c.agg(sum("n").as("n"))
       val h = c.join(broadcast(rt), Seq("src"))
@@ -2426,7 +2425,7 @@ object DriftQueries {
             .stripMargin).as("term_micro"))
         .groupBy("src", "n_src")
         .agg(sum("term_micro").as("h_micro_nats"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       // micro-nats × event-scale counts: DECIMAL(38,0) intermediate like
       // o6's ppm spelling, BIGINT quotient
       val rate = h.crossJoin(broadcast(nn))
@@ -2479,7 +2478,7 @@ object DriftQueries {
         .select(col("user_id"), expr(s"($us) div 86400000000").as("day"))
       val u = e.groupBy("user_id")
         .agg(min("day").as("fd"), max("day").as("ld"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val grid = e.select("day").distinct()
       val st = u.groupBy(col("fd").as("day")).agg(count(lit(1)).as("c"))
       val en = u.groupBy(col("ld").as("day")).agg(count(lit(1)).as("c2"))
@@ -2544,7 +2543,7 @@ object DriftQueries {
         .select(col("user_id"), expr(s"($us) div 86400000000").as("day"))
       val u = e.groupBy("user_id")
         .agg(min("day").as("fd"), max("day").as("ld"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val grid = e.select("day").distinct()
       val st = u.groupBy(col("fd").as("day")).agg(count(lit(1)).as("c"))
       val en = u.groupBy(col("ld").as("day")).agg(count(lit(1)).as("c2"))
@@ -2720,7 +2719,7 @@ object DriftQueries {
       val u = e.groupBy("user_id")
         .agg(min("day").as("fd"), max("day").as("ld"))
         .withColumn("grp", pmod(col("user_id"), lit(2L)))
-        .localCheckpoint(eager = false) // user-cardinality, feeds three aggregates
+        .localCheckpoint() // user-cardinality, feeds three aggregates
       val grid = e.select("day").distinct()
       val gg = grid.crossJoin(u.select("grp").distinct())
       val st = u.groupBy(col("grp"), col("fd").as("day")).agg(count(lit(1)).as("c"))
@@ -2906,7 +2905,7 @@ object DriftQueries {
         col("event_type").as("arm"),
         when(col("value") >= 100, 1L).otherwise(0L).as("r"))
       val lg = e.where(col("arm") =!= "click" || col("event_id") % 10 === 0)
-        .localCheckpoint(eager = false) // log-cardinality; feeds nl + per-arm legs
+        .localCheckpoint() // log-cardinality; feeds nl + per-arm legs
       val nl = lg.agg(count(lit(1)).as("n_log"), sum("r").as("s_log"))
       val a = lg.groupBy("arm").agg(count(lit(1)).as("na"), sum("r").as("sa"))
       val k = a.agg(count(lit(1)).as("nk"))
@@ -2959,7 +2958,7 @@ object DriftQueries {
         |CROSS JOIN no
         |ORDER BY lift_ppm DESC, pa, pb""".stripMargin) { (s, d) =>
       val b = lineitem(s, d).select("l_orderkey", "l_partkey").distinct()
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val no = b.agg(countDistinct("l_orderkey").as("n_orders"))
       val na = b.groupBy("l_partkey").agg(count(lit(1)).as("n"))
       val p = b.select(col("l_orderkey"), col("l_partkey").as("pa"))
@@ -3006,7 +3005,7 @@ object DriftQueries {
         |JOIN sz y ON y.event_type = p.type_b
         |ORDER BY type_a, type_b""".stripMargin) { (s, d) =>
       val ut = events(s, d).select("user_id", "event_type").distinct()
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val sz = ut.groupBy("event_type").agg(count(lit(1)).as("n"))
       val p = ut.select(col("user_id"), col("event_type").as("type_a"))
         .join(ut.select(col("user_id"), col("event_type").as("type_b")),
@@ -3054,7 +3053,7 @@ object DriftQueries {
       val agg = dc.select(expr("(day + 4) % 7").as("dow"), col("c"))
         .groupBy("dow")
         .agg(sum("c").as("t_d"), count(lit(1)).as("n_d"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val tot = agg.agg(sum("t_d").as("t"), sum("n_d").as("n"))
       agg.crossJoin(broadcast(tot))
         .select(col("dow"), col("n_d").as("n_days"), col("t_d").as("n_events"),
@@ -3107,13 +3106,13 @@ object DriftQueries {
       val mn = c0.agg(min("day").as("d0"))
       val c = c0.crossJoin(broadcast(mn))
         .select((col("day") - col("d0")).as("d"), col("c"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val a = c.select(col("d").as("di"), col("c").as("ci"))
       val b = c.select(col("d").as("dj"), col("c").as("cj"))
       val p = a.join(b, col("dj") > col("di"))
         .select(col("di"), col("dj"),
           expr("(1000000 * (cj - ci)) div (dj - di)").as("slope_ppm"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       // bounded table (calendar² rows): the global rank window is safe here
       val med = p
         .withColumn("rn", row_number().over(
@@ -3188,7 +3187,7 @@ object DriftQueries {
           floor(min("o_totalprice") * 100).cast("long").as("f_price"),
           count(lit(1)).as("f_lines"),
           sum(floor(col("l_quantity")).cast("long")).as("f_qty"))
-        .localCheckpoint(eager = false) // three feature legs share the one fact join
+        .localCheckpoint() // three feature legs share the one fact join
       // ONE ranged prefix-sum pass over the unioned (feature, score)
       // frame instead of three independent rangedOffsets legs (r15
       // optimization): the per-leg shape paid 3× (range-sample +
@@ -3324,7 +3323,7 @@ object DriftQueries {
       val day = events(s, d)
         .groupBy(expr(s"($us) div 86400000000").as("day"))
         .agg(count(lit(1)).as("y"))
-        .localCheckpoint(eager = false) // calendar-bounded
+        .localCheckpoint() // calendar-bounded
       // bounded calendar window (the km_survival contract)
       val ix = day
         .withColumn("i",
@@ -3343,7 +3342,7 @@ object DriftQueries {
       val rk = res
         .withColumn("r",
           row_number().over(Window.orderBy("mean_micro", "b")).cast("long"))
-        .localCheckpoint(eager = false) // 400 rows
+        .localCheckpoint() // 400 rows
       val pt = day.agg(expr("(1000000 * sum(y)) div count(1)").as("point_micro"),
         count(lit(1)).as("n_days"))
       pt.crossJoin(broadcast(
@@ -3405,7 +3404,7 @@ object DriftQueries {
           max(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("pos"))
         .groupBy("score")
         .agg(count(lit(1)).as("n"), sum("pos").as("s"))
-        .localCheckpoint(eager = false) // alphabet-bounded; feeds triangle + output
+        .localCheckpoint() // alphabet-bounded; feeds triangle + output
       val pairs = b.select(col("score").as("i"))
         .crossJoin(b.select(col("score").as("j")))
         .where(col("i") <= col("j"))
@@ -3603,7 +3602,7 @@ object DriftQueries {
       val cnts = documents(s, d)
         .groupBy(col("source"), col("n_chars").as("v"))
         .agg(count(lit(1)).as("c"))
-        .localCheckpoint(eager = false) // grid/srcs/tot/cum all read this one fold
+        .localCheckpoint() // grid/srcs/tot/cum all read this one fold
       val tot = cnts.groupBy("source").agg(sum("c").as("n"))
       val grid = cnts.select("v").distinct()
       val srcs = cnts.select("source").distinct()
@@ -3806,7 +3805,7 @@ object DriftQueries {
         .select(col("day"), col("y"), col("t7"),
           (col("day") % 7).as("dow"),
           (lit(7L) * col("y") - col("t7")).as("det_x7"))
-        .localCheckpoint(eager = false) // dow means + the final join share it
+        .localCheckpoint() // dow means + the final join share it
       val sf = f.groupBy("dow")
         .agg(sum("det_x7").as("sd"), count(lit(1)).as("nd"))
         .select(col("dow"), expr("sd div nd").as("seas_x7"))
@@ -3878,7 +3877,7 @@ object DriftQueries {
       val f = g.filter(col("rk") >= 4 && col("rk") <= col("n") - 3)
         .select(col("day"), col("t7"), (col("day") % 7).as("dow"),
           (lit(7L) * col("y") - col("t7")).as("det_x7"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val sf = f.groupBy("dow")
         .agg(sum("det_x7").as("sd"), count(lit(1)).as("nd"))
         .select(col("dow"), expr("sd div nd").as("seas_x7"))
@@ -4069,7 +4068,7 @@ object DriftQueries {
           .as("pos"))
       val st = lab.groupBy("c_nationkey")
         .agg(count(lit(1)).as("n"), sum("pos").cast("long").as("a"))
-        .localCheckpoint(eager = false) // ≤25 rows; feeds the total and the LOO fold
+        .localCheckpoint() // ≤25 rows; feeds the total and the LOO fold
       val t = st.agg(sum("n").cast("long").as("nn"), sum("a").cast("long").as("aa"),
         count(lit(1)).as("g"))
       val loo = st.crossJoin(broadcast(t))
@@ -4245,7 +4244,7 @@ object DriftQueries {
         .groupBy("l_partkey")
         .agg(count(lit(1)).as("n"),
           sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("x"))
-        .localCheckpoint(eager = false) // moments + the shrunk report share it
+        .localCheckpoint() // moments + the shrunk report share it
       val pm = pr
         .agg(count(lit(1)).as("k"),
           sum(expr("(1000000 * x) div n")).as("srate"),
@@ -4439,7 +4438,7 @@ object DriftQueries {
       val it = lineitem(s, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
         .distinct()
-        .localCheckpoint(eager = false) // the pair join and both count legs share it
+        .localCheckpoint() // the pair join and both count legs share it
       val cnt = it.groupBy("p").agg(count(lit(1)).as("n"))
       val pr = it.toDF("ok", "pa").join(it.toDF("ok", "pb"), Seq("ok"))
         .filter(col("pa") =!= col("pb"))
@@ -4636,7 +4635,7 @@ object DriftQueries {
       val b = dd.groupBy("bucket")
         .agg(sum("is_train").cast("long").as("n_t"),
           sum(expr("1 - is_train")).cast("long").as("n_v"))
-        .localCheckpoint(eager = false) // bounded bins; feeds terms AND the total
+        .localCheckpoint() // bounded bins; feeds terms AND the total
       val tot = b.agg(sum("n_t").cast("long").as("nt"), sum("n_v").cast("long").as("nv"))
       val terms = b.crossJoin(broadcast(tot))
         .select(col("bucket"), col("n_t"), col("n_v"),
@@ -4647,7 +4646,7 @@ object DriftQueries {
                  |      AS BIGINT))
                  |    div (CAST(nt AS DECIMAL(38,0)) * nv) AS BIGINT)
                  |ELSE NULL END""".stripMargin).as("term_micro"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val g = terms.agg(sum("term_micro").cast("long").as("psi_micro"),
         count(when(col("term_micro").isNull, 1)).as("n_skipped"))
       terms.crossJoin(broadcast(g))
@@ -4741,7 +4740,7 @@ object DriftQueries {
                  |    * ((a + c) * (b + d)))
                  |    div (CAST(a + b + c + d AS DECIMAL(38,0)) * (a + b + c + d - 1)) AS BIGINT)
                  |ELSE 0L END""".stripMargin).as("v_micro"))
-        .localCheckpoint(eager = false) // ≤25 rows; feeds output AND the pooled fold
+        .localCheckpoint() // ≤25 rows; feeds output AND the pooled fold
       val g = t.agg(sum("a").cast("long").as("sa"),
         sum("ad_micro").cast("long").as("sad"),
         sum("bc_micro").cast("long").as("sbc"),
@@ -4800,7 +4799,7 @@ object DriftQueries {
         .select(col("source"),
           explode(expr(graft.operators.TextQueries.toksExpr)).as("t"))
         .groupBy("source", "t").agg(count(lit(1)).as("n"))
-        .localCheckpoint(eager = false) // vocab-cardinality; feeds norms + both join sides
+        .localCheckpoint() // vocab-cardinality; feeds norms + both join sides
       val nrm = st.groupBy("source")
         .agg(sum(expr("n * n")).cast("long").as("n2"))
       val a = st.select(col("source").as("source_a"), col("t"), col("n").as("na"))
@@ -4994,7 +4993,7 @@ object DriftQueries {
         .agg(expr("CAST(CASE WHEN count(*) >= 4 THEN 1 ELSE 0 END AS BIGINT)").as("y1"),
           expr("CAST(max(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT)")
             .as("pos"))
-        .localCheckpoint(eager = false) // feeds the median rank scan AND the pairing
+        .localCheckpoint() // feeds the median rank scan AND the pairing
       val (ranked, _) = graft.util.Scale.globalRowNumber(
         lab, Seq(col("v"), col("o_orderkey")), "rk")
       val nn = lab.agg(count(lit(1)).as("nn"))
@@ -5077,7 +5076,7 @@ object DriftQueries {
         |FROM parts""".stripMargin) { (s, d) =>
       val x = orders(s, d).select(col("o_orderpriority").as("grp"),
         expr("CAST(floor(o_totalprice) AS BIGINT)").as("v"), col("o_orderkey"))
-        .localCheckpoint(eager = false) // feeds the rank scan and the deviation join
+        .localCheckpoint() // feeds the rank scan and the deviation join
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("grp").orderBy("v", "o_orderkey")
       val med = x.select(col("grp"), col("v"),
@@ -5093,7 +5092,7 @@ object DriftQueries {
         .select(col("grp"), col("ng"), col("sz"), col("sz2"),
           expr("CAST((1000000 * CAST(sz AS DECIMAL(38,0))) div ng AS BIGINT)")
             .as("zbar_micro"))
-        .localCheckpoint(eager = false) // ≤5 rows; feeds the total and the parts fold
+        .localCheckpoint() // ≤5 rows; feeds the total and the parts fold
       val t = g.agg(sum("ng").cast("long").as("n"), count(lit(1)).as("k"),
         expr("CAST((1000000 * CAST(sum(sz) AS DECIMAL(38,0))) div sum(ng) AS BIGINT)")
           .as("zbar_all_micro"))

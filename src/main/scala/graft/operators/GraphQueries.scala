@@ -31,16 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object GraphQueries {
 
-  // Checkpoint discipline (r16): every localCheckpoint here is LAZY
-  // (eager = false). The unrolled fixpoints have no convergence count,
-  // so nothing needs a materialization barrier — an eager checkpoint
-  // per round serialized 2×rounds driver jobs into the BUILD phase
-  // (bench_diag: 16-28 eager_build_jobs per graph query), while a lazy
-  // one pins the same blocks on first compute INSIDE the final action's
-  // single job DAG. Sharing is unchanged: checkpoint-marked RDDs are
-  // persisted (MEMORY_AND_DISK), so later rounds and sibling consumers
-  // read pinned blocks exactly as before.
-
   val Iters = 3
 
   /** Minimum surviving degree for [[defs `graph_kcore`]]. */
@@ -91,12 +81,12 @@ object GraphQueries {
       val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
         .unionByName(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
         .repartition(col("a"))
-        .localCheckpoint(eager = false)
-      val deg = edges.groupBy("a").agg(count(lit(1)).as("deg")).localCheckpoint(eager = false)
+        .localCheckpoint()
+      val deg = edges.groupBy("a").agg(count(lit(1)).as("deg")).localCheckpoint()
       val nRow = deg.agg(count(lit(1)).as("n"))
       var p = deg.crossJoin(broadcast(nRow))
         .select(col("a").as("v"), expr("1000000000000L div n").as("p"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       for (_ <- 1 to Iters) {
         // shape audited at the 1000× scale point (500k nodes / 161M
         // edges, r11): this two-broadcast chain over pinned blocks is
@@ -116,7 +106,7 @@ object GraphQueries {
           .crossJoin(broadcast(nRow))
           .select(col("b").as("v"),
             expr("(150000000000L div n) + contrib").as("p"))
-          .localCheckpoint(eager = false)
+          .localCheckpoint()
       }
       p.join(deg, p("v") === deg("a"))
         .select(col("v").as("doc_id"), col("deg"), col("p").as("pr_x1e12"))
@@ -162,7 +152,7 @@ object GraphQueries {
       val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
         .unionByName(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
         .repartition(col("b"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val lab = lpaLabels(edges)
       val sz = lab.groupBy("lab").agg(count(lit(1)).as("community_size"))
       lab.join(sz, Seq("lab"))
@@ -217,22 +207,22 @@ object GraphQueries {
       val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
         .unionByName(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
         .repartition(col("a"))
-        .localCheckpoint(eager = false)
-      val deg = edges.groupBy("a").agg(count(lit(1)).as("deg")).localCheckpoint(eager = false)
-      val seeds = deg.filter(col("a") < PprSeedMax).select("a").localCheckpoint(eager = false)
+        .localCheckpoint()
+      val deg = edges.groupBy("a").agg(count(lit(1)).as("deg")).localCheckpoint()
+      val seeds = deg.filter(col("a") < PprSeedMax).select("a").localCheckpoint()
       val nRow = seeds.agg(count(lit(1)).as("n"))
       var p = seeds.crossJoin(broadcast(nRow))
         .select(col("a").as("v"), expr("1000000000000L div n").as("p"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val restart = seeds.crossJoin(broadcast(nRow))
         .select(col("a").as("v"), expr("150000000000L div n").as("x"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       for (_ <- 1 to Iters) {
         p = edges.join(p, edges("a") === p("v")).join(deg, Seq("a"))
           .select(col("b").as("v"), expr("((85 * p) div 100) div deg").as("x"))
           .unionByName(restart)
           .groupBy("v").agg(sum("x").as("p"))
-          .localCheckpoint(eager = false)
+          .localCheckpoint()
       }
       p.filter(col("p") > 0)
         .select(col("v").as("doc_id"), col("p").as("ppr_x1e12"))
@@ -263,17 +253,17 @@ object GraphQueries {
       val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
         .unionByName(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
         .repartition(col("a"))
-        .localCheckpoint(eager = false)
-      val nodes = edges.select("a").distinct().localCheckpoint(eager = false)
+        .localCheckpoint()
+      val nodes = edges.select("a").distinct().localCheckpoint()
       var dist = nodes.filter(col("a") < PprSeedMax)
         .select(col("a").as("v"), lit(0L).as("dist"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       for (_ <- 1 to BfsHops) {
         dist = edges.join(dist, edges("a") === dist("v"))
           .select(col("b").as("v"), (col("dist") + 1).as("dist"))
           .unionByName(dist)
           .groupBy("v").agg(min("dist").as("dist"))
-          .localCheckpoint(eager = false)
+          .localCheckpoint()
       }
       val layers = dist.groupBy(col("dist").as("hop"))
         .agg(count(lit(1)).as("n_docs"))
@@ -318,7 +308,7 @@ object GraphQueries {
     // pair table, never a quadratic scan.
     "graph_link_adamic_adar" -> QueryDef.sql(AdamicAdarOracleSql) { (s, d) =>
       val pairs = SignatureStore.ensureK8Pairs(s, d)
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val deg0 = pairs.select(col("doc_a").as("v"))
         .unionByName(pairs.select(col("doc_b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("d"))
@@ -327,10 +317,10 @@ object GraphQueries {
         .join(keep.withColumnRenamed("v", "doc_a"), Seq("doc_a"), "left_semi")
         .join(keep.withColumnRenamed("v", "doc_b"), Seq("doc_b"), "left_semi")
         .select(col("doc_a").as("a"), col("doc_b").as("b"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val eu = ec.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(ec.select(col("b").as("src"), col("a").as("dst")))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       // wedge centers have ≥ 2 distinct neighbors by construction, so
       // ln(deg) is never 0 in a term that survives the join below
       val inv = eu.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
@@ -383,7 +373,7 @@ object GraphQueries {
          |    // (m * sxx - CAST(sx AS HUGEINT) * sx) AS BIGINT) AS r_ppm
          |FROM agg""".stripMargin) { (s, d) =>
       val pairs = SignatureStore.ensureK8Pairs(s, d)
-        .localCheckpoint(eager = false) // degree fold + endpoint join share it
+        .localCheckpoint() // degree fold + endpoint join share it
       val deg = pairs.select(col("doc_a").as("v"))
         .unionByName(pairs.select(col("doc_b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("d"))
@@ -445,7 +435,7 @@ object GraphQueries {
           col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
         .distinct()
-        .localCheckpoint(eager = false) // all four half-steps re-read the edges
+        .localCheckpoint() // all four half-steps re-read the edges
       val h1 = e.groupBy("c").agg(count(lit(1)).as("h"))
       val a1 = e.join(h1, Seq("c")).groupBy("s").agg(sum("h").as("a"))
       val h2 = e.join(a1, Seq("s")).groupBy("c").agg(sum("a").as("h"))
@@ -560,17 +550,17 @@ object GraphQueries {
     val edges0 = pairs0.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .unionByName(pairs0.select(col("doc_b").as("a"), col("doc_a").as("b")))
       .repartition(col("a"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val deg0 = edges0.groupBy("a").agg(count(lit(1)).as("deg0"))
     var edges = edges0
     for (_ <- 1 to rounds) {
       val surv = edges.groupBy("a").agg(count(lit(1)).as("dg"))
         .filter(col("dg") >= k).select("a")
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       edges = edges
         .join(surv, Seq("a"), "left_semi")
         .join(surv.withColumnRenamed("a", "b"), Seq("b"), "left_semi")
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
     }
     edges.groupBy("a").agg(count(lit(1)).as("core_deg"))
       .join(deg0, Seq("a"))
@@ -662,14 +652,14 @@ object GraphQueries {
       edges: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     var lab = edges.select(col("a").as("v")).distinct()
       .select(col("v"), col("v").as("lab"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     for (_ <- 1 to Iters) {
       lab = edges.join(lab, edges("b") === lab("v"))
         .groupBy(col("a"), col("lab")).agg(count(lit(1)).as("n"))
         .groupBy(col("a"))
         .agg(max_by(col("lab"), struct(col("n"), -col("lab"))).as("lab"))
         .select(col("a").as("v"), col("lab"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
     }
     lab
   }
@@ -684,8 +674,8 @@ object GraphQueries {
     val edges = pairs0.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .unionByName(pairs0.select(col("doc_b").as("a"), col("doc_a").as("b")))
       .repartition(col("b"))
-      .localCheckpoint(eager = false)
-    val lab = lpaLabels(edges).localCheckpoint(eager = false)
+      .localCheckpoint()
+    val lab = lpaLabels(edges).localCheckpoint()
     val deg = edges.groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
     val m2 = edges.agg(count(lit(1)).as("m2"))
     val ein = edges
@@ -703,7 +693,7 @@ object GraphQueries {
         (coalesce(col("e_in"), lit(0L)) * col("m2") -
           col("deg_sum") * col("deg_sum")).as("num"),
         col("m2"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val tot = terms.agg(sum("num").as("tn"))
     terms.crossJoin(broadcast(tot))
       .select(col("community"), col("n_nodes"), col("e_in"), col("deg_sum"),
@@ -716,7 +706,7 @@ object GraphQueries {
     * [[TriDegreeCap]]); exposed for property tests on planted graphs. */
   def triangleStats(pairs0: org.apache.spark.sql.DataFrame,
       cap: Int = TriDegreeCap): org.apache.spark.sql.DataFrame = {
-    val pairs = pairs0.localCheckpoint(eager = false)
+    val pairs = pairs0.localCheckpoint()
     val deg0 = pairs.select(col("doc_a").as("v"))
       .unionByName(pairs.select(col("doc_b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
@@ -725,7 +715,7 @@ object GraphQueries {
       .join(keep.withColumnRenamed("v", "doc_a"), Seq("doc_a"), "left_semi")
       .join(keep.withColumnRenamed("v", "doc_b"), Seq("doc_b"), "left_semi")
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val degc = e.select(col("a").as("v"))
       .unionByName(e.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))

@@ -199,7 +199,7 @@ object LayoutQueries {
         "c_discount", "c_partkey")
       val labels = Seq("l_returnflag", "l_linestatus", "l_quantity",
         "l_discount", "l_partkey")
-      val rr = r.localCheckpoint(eager = false) // 3 consumers: two run joins + NDV agg
+      val rr = r.localCheckpoint() // 3 consumers: two run joins + NDV agg
       def runChanges(rk: String, out: String) = {
         val a = rr.select((col(rk) + 1).as("rj") +:
           vcols.map(c => col(c).as(s"a_$c")): _*)
@@ -362,7 +362,7 @@ object LayoutQueries {
             col("min_x"), col("max_x"), col("min_y"), col("max_y"))
       val files = stats("hour_sorted", col("x"))
         .unionByName(stats("zorder", expr("z div 16")))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val probes = (0L to 15L).toDF("p")
       def scansOf(dim: String, lo: String, hi: String) =
         probes.crossJoin(files)

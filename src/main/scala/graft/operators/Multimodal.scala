@@ -699,7 +699,7 @@ object Multimodal {
         |ORDER BY nr.phash_a, nr.phash_b""".stripMargin) { (s, d) =>
       val hp = SignatureStore.ensureImagePhash(s, d)
         .groupBy("phash").agg(count(lit(1)).as("n"))
-        .localCheckpoint(eager = false) // bounded (<= 2^16 rows); feeds bands + both mass joins
+        .localCheckpoint() // bounded (<= 2^16 rows); feeds bands + both mass joins
       val bands = hp.select(col("phash"), col("n"),
           explode(sequence(lit(0), lit(3))).as("b"))
         .withColumn("nib", expr("shiftright(phash, 4 * b) % 16"))

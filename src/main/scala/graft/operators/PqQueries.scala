@@ -109,9 +109,9 @@ object PqQueries {
     * passes `scaledSub(e)`, the residual path passes IVF residuals
     * ([[residualSub]]); the Lloyd kernels are input-agnostic. */
   def trainCodebookOn(e: DataFrame, sub: DataFrame): DataFrame = {
-    var cb = initCodebook(e, sub).localCheckpoint(eager = false)
+    var cb = initCodebook(e, sub).localCheckpoint()
     for (_ <- 1 to Iters)
-      cb = pqUpdate(sub, pqAssign(sub, cb), cb).localCheckpoint(eager = false)
+      cb = pqUpdate(sub, pqAssign(sub, cb), cb).localCheckpoint()
     cb
   }
 
@@ -704,8 +704,8 @@ object PqQueries {
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       val assign = SignatureStore.ensureIvfAssignments(
         s, d, () => VectorQueries.ivfAssign(e, centroids))
-      val csub = centroidSub(centroids).localCheckpoint(eager = false)
-      val rsub = residualSub(scaledSub(e), assign, csub).localCheckpoint(eager = false)
+      val csub = centroidSub(centroids).localCheckpoint()
+      val rsub = residualSub(scaledSub(e), assign, csub).localCheckpoint()
       val cb = trainCodebookOn(e, rsub)
       val codes = pqAssign(rsub, cb)
       ivfPqResidualSearch(assign, codes, e, cb, csub, centroids, queries,
@@ -729,7 +729,7 @@ object PqQueries {
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       val assign = SignatureStore.ensureIvfAssignments(
         s, d, () => VectorQueries.ivfAssign(e, centroids))
-      val csub = centroidSub(centroids).localCheckpoint(eager = false)
+      val csub = centroidSub(centroids).localCheckpoint()
       val (cb, codes) = SignatureStore.ensureResidualPqStore(s, d,
         () => trainCodebookOn(e, residualSub(scaledSub(e), assign, csub)),
         cbStored => packCodes(pqAssign(residualSub(scaledSub(e), assign, csub), cbStored)))
@@ -770,7 +770,7 @@ object PqQueries {
       // timed live by ann_ivfpq_residual; this query GRADES the two
       // finished tiers — bit-identity of store vs live is pinned by
       // ann_ivfpq_residual_stored's shared oracle)
-      val csub = centroidSub(centroids).localCheckpoint(eager = false)
+      val csub = centroidSub(centroids).localCheckpoint()
       val (cbR, codesR) = SignatureStore.ensureResidualPqStore(s, d,
         () => trainCodebookOn(e, residualSub(scaledSub(e), assign, csub)),
         cbStored => packCodes(pqAssign(

@@ -2574,7 +2574,7 @@ object RelationalQueries {
       // unmaterialized dim would reuse its aggregate's exchange and sit
       // as Sort←HashAggregate←Shuffle, which AQE's skew rule skips.
       val dim = e.groupBy("skew_user").agg(count(lit(1)).as("n_events"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       e.join(dim.hint("SHUFFLE_MERGE"), Seq("skew_user"))
         .select("event_id", "skew_user", "pad", "n_events")
         .orderBy("event_id")
@@ -2851,7 +2851,7 @@ object RelationalQueries {
       val e = events(s, d)
         .select(col("user_id"), col("ts_ns").as("ns"), col("event_id"),
           col("event_type"), expr(s"(($us) div 86400000000)").as("day"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val mm = e.agg(expr("(min(day) + max(day)) div 2").as("mid"))
       val w = Window.partitionBy(col("user_id")).orderBy(col("ns"), col("event_id"))
       def chain(in: org.apache.spark.sql.DataFrame) = in
@@ -2925,7 +2925,7 @@ object RelationalQueries {
         .withColumn("session_id", sum(col("is_new")).over(w))
         .groupBy(col("user_id"), col("session_id"))
         .agg(min("ns").as("s"), max("ns").as("e"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val bounds = sess.select(col("user_id"), col("session_id"),
           col("s").as("ns"), lit(1L).as("delta"), lit(0).as("ord"))
         .unionByName(sess.select(col("user_id"), col("session_id"),
@@ -2939,7 +2939,7 @@ object RelationalQueries {
           sum("delta").over(lw) +
             coalesce(element_at(typedLit(offsets), col("_pid")), lit(0L)))
         .select("ns", "run")
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val mx = run.agg(max("run").as("peak_concurrent"))
       val fst = run.crossJoin(broadcast(mx))
         .filter(col("run") === col("peak_concurrent"))
@@ -3031,7 +3031,7 @@ object RelationalQueries {
       val sp = events(s, d)
         .groupBy("user_id", "event_type")
         .agg(min("ts_ns").as("s"), max("ts_ns").as("e"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val a = sp.select(col("user_id"), col("event_type").as("type_a"),
         col("s").as("sa"), col("e").as("ea"))
       val b = sp.select(col("user_id"), col("event_type").as("type_b"),
@@ -3082,13 +3082,13 @@ object RelationalQueries {
       val ev = events(s, d)
       val sg = ev.filter(col("event_type") === "signup")
         .groupBy("user_id").agg(min("ts_ns").as("sgn"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val pu = ev.filter(col("event_type") === "purchase")
         .join(sg, Seq("user_id"))
         .filter(col("ts_ns") >= col("sgn"))
         .groupBy("user_id", "sgn").agg(min("ts_ns").as("pur"))
       val lat = pu.select(expr("(pur - sgn) div 86400000000000").as("latency_days"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val h = lat.groupBy("latency_days").agg(count(lit(1)).as("n_users"))
       val t = sg.agg(count(lit(1)).as("n_signups"))
       val c = lat.agg(count(lit(1)).as("n_converted"))
@@ -3199,7 +3199,7 @@ object RelationalQueries {
         expr(s"($us) div 86400000000").as("day"),
         expr("CAST(round(1000000 * round(value, 6)) AS BIGINT)").as("micro"))
       val mm = ev0.agg(expr("(min(day) + max(day)) div 2").as("mid"))
-      val ev = ev0.crossJoin(broadcast(mm)).localCheckpoint(eager = false)
+      val ev = ev0.crossJoin(broadcast(mm)).localCheckpoint()
       val base = ev.filter(col("day") <= col("mid"))
         .select(col("day"), col("event_type"), col("micro"), lit(1L).as("w"))
       val delta = ev.filter(col("day") > col("mid"))
@@ -3296,7 +3296,7 @@ object RelationalQueries {
         expr(s"($us) div 86400000000").as("day"),
         expr("CAST(round(1000000 * round(value, 6)) AS BIGINT)").as("micro"))
       val mm = ev0.agg(expr("(min(day) + max(day)) div 2").as("mid"))
-      val ev = ev0.crossJoin(broadcast(mm)).localCheckpoint(eager = false)
+      val ev = ev0.crossJoin(broadcast(mm)).localCheckpoint()
       val base = ev.filter(col("day") <= col("mid"))
       val v1 = base.groupBy("day", "event_type")
         .agg(min("micro").as("mn1"), max("micro").as("mx1"), count(lit(1)).as("n1"))
@@ -3367,7 +3367,7 @@ object RelationalQueries {
         |GROUP BY event_type ORDER BY event_type""".stripMargin) { (s, d) =>
       val ev = events(s, d)
       val dim = ev.filter(col("event_type") === "signup")
-        .select(col("user_id")).distinct().localCheckpoint(eager = false)
+        .select(col("user_id")).distinct().localCheckpoint()
       def posOf(j: org.apache.spark.sql.Column, c: org.apache.spark.sql.Column) =
         pmod(graft.functions.Md5Head60.md5_head60(concat(j.cast("string"), lit("#"),
           c.cast("string"))), lit(1024))
@@ -3446,7 +3446,7 @@ object RelationalQueries {
         .select(col("event_type").as("src"), col("day"), col("dst"))
         .crossJoin(broadcast(mm))
         .filter(col("dst").isNotNull)
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val tr = p.filter(col("day") <= col("mid"))
         .groupBy("src", "dst").agg(count(lit(1)).as("n"))
       val predW = Window.partitionBy(col("src")).orderBy(col("n").desc, col("dst"))
@@ -4100,9 +4100,9 @@ object RelationalQueries {
         |         GROUP BY o_orderpriority)
         |ON "F", "O", "P" INTO NAME status VALUE n
         |ORDER BY o_orderpriority, status""".stripMargin) { (s, d) =>
-      orders(s, d).createOrReplaceTempView("graft_piv_orders")
+      orders(s, d).createOrReplaceTempView("graft_unpiv_orders")
       s.sql(
-        """UNPIVOT (PIVOT graft_piv_orders ON o_orderstatus USING count(*)
+        """UNPIVOT (PIVOT graft_unpiv_orders ON o_orderstatus USING count(*)
           |         GROUP BY o_orderpriority)
           |ON "F", "O", "P" INTO NAME status VALUE n
           |ORDER BY o_orderpriority, status""".stripMargin)
@@ -4702,7 +4702,7 @@ object RelationalQueries {
         .select(expr(s"((rk - 1) * 10) div ${n}L + 1").as("decile"), col("cents"))
         .groupBy("decile")
         .agg(count(lit(1)).as("n_cust"), sum("cents").cast("long").as("cents"))
-        .localCheckpoint(eager = false) // 10 rows; feeds the total AND the curve
+        .localCheckpoint() // 10 rows; feeds the total AND the curve
       val tot = dec.agg(sum("cents").cast("long").as("t"))
       dec.withColumn("cum_cents", sum("cents").over(
           org.apache.spark.sql.expressions.Window.orderBy("decile")).cast("long"))
@@ -4752,7 +4752,7 @@ object RelationalQueries {
         .select(col("doc_id"), graft.functions.WsTokens.ws_tokens(col("text")).as("tk"))
         .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
           size(array_distinct(col("tk"))).cast("long").as("dv"))
-        .localCheckpoint(eager = false) // two index heads + the random-access join
+        .localCheckpoint() // two index heads + the random-access join
       val headA = base.orderBy(col("dl").desc, col("doc_id")).limit(64)
       val headB = base.orderBy(col("dv").desc, col("doc_id")).limit(64)
       val am = headA.agg(min("dl").as("a_m"))
@@ -4765,7 +4765,7 @@ object RelationalQueries {
         .withColumn("rank", row_number().over(org.apache.spark.sql.expressions
           .Window.orderBy(col("s").desc, col("doc_id"))))
         .filter(col("rank") <= 10)
-        .localCheckpoint(eager = false) // bounded k rows; feeds kth AND the output
+        .localCheckpoint() // bounded k rows; feeds kth AND the output
       val kth = topk.agg(min("s").as("kth"))
       topk.crossJoin(broadcast(am)).crossJoin(broadcast(bm))
         .crossJoin(broadcast(kth))
@@ -5167,7 +5167,7 @@ object RelationalQueries {
       val v = js.groupBy("sset")
         .agg(count(lit(1)).as("n_j"), sum("conv").as("n_c"))
         .withColumn("v_ppm", expr("CAST((1000000 * n_c) div n_j AS BIGINT)"))
-        .localCheckpoint(eager = false) // member explode + the S\{i} lookup share it
+        .localCheckpoint() // member explode + the S\{i} lookup share it
       val nch = tch.agg(countDistinct("ch").as("n"))
       val phi = shapleyPhi(v, nch)
       val tp = phi.agg(
@@ -5279,7 +5279,7 @@ object RelationalQueries {
                  |    (CAST(x_n AS DOUBLE) * n_r) / (CAST(x_r AS DOUBLE) * n_n)), 6)) AS BIGINT))
                  |    div x_r AS BIGINT)
                  |END""".stripMargin).as("wcontrib"))
-        .localCheckpoint(eager = false) // ≤25 rows; feeds the output AND tw/bn
+        .localCheckpoint() // ≤25 rows; feeds the output AND tw/bn
       val regl = reg.crossJoin(broadcast(tot))
         .select(col("r_name"), col("n_r"), col("x_r"), col("n"), col("x"),
           expr("""CASE WHEN x_r = 0 THEN 0L ELSE
@@ -5287,7 +5287,7 @@ object RelationalQueries {
                  |    (CAST(x_r AS DOUBLE) * n) / (CAST(x AS DOUBLE) * n_r)), 6)) AS BIGINT))
                  |    div x AS BIGINT)
                  |END""".stripMargin).as("contrib"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val bn = natl.agg(sum("contrib").cast("long").as("bn"))
       val br = regl.agg(sum("contrib").cast("long").as("br"))
       val ww = natl.groupBy("r_name").agg(sum("wcontrib").cast("long").as("tw_r"))
@@ -5337,7 +5337,7 @@ object RelationalQueries {
         expr("concat(substring(name, 1, i - 1), substring(name, i + 1, 1000000))")
           .as("k"))
       .distinct()
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     // banded verify: the 3-arg levenshtein computes only the |k|<=1
     // diagonal band and early-exits (returns -1 above the threshold) —
     // O(len) instead of the full O(len^2) DP, which at the ER-100x

@@ -78,7 +78,7 @@ object RerankQueries {
       .filter(col("rn") === 1)
       .select(col("qid"), col("cid"), lit(1).as("rnk"),
         (lit(WRel) * col("ri")).as("obj"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     for (step <- 2 to k) {
       val remaining = cand.join(selected.select("qid", "cid"), Seq("qid", "cid"), "left_anti")
       val next = remaining
@@ -91,7 +91,7 @@ object RerankQueries {
         .withColumn("rn", row_number().over(objW))
         .filter(col("rn") === 1)
         .select(col("qid"), col("cid"), lit(step).as("rnk"), col("obj"))
-      selected = selected.unionByName(next).localCheckpoint(eager = false)
+      selected = selected.unionByName(next).localCheckpoint()
     }
     selected
   }
@@ -142,8 +142,8 @@ object RerankQueries {
       val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
       val queries = e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val cand = bruteShortlist(e, queries).localCheckpoint(eager = false) // bounded: queries × N
-      val pair = pairSims(e, cand).localCheckpoint(eager = false) // bounded: queries × N × (N−1)
+      val cand = bruteShortlist(e, queries).localCheckpoint() // bounded: queries × N
+      val pair = pairSims(e, cand).localCheckpoint() // bounded: queries × N × (N−1)
       mmrSelect(cand, pair, K)
         .select("qid", "rnk", "cid", "obj")
         .orderBy("qid", "rnk")

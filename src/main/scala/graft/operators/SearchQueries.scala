@@ -68,7 +68,7 @@ object SearchQueries {
     * without it the whole postings stage runs twice (measured: the two
     * consumers doubled bm25_search's cost in round 4). */
   def bm25Rank(tfIn: DataFrame, stats: DataFrame, qt: DataFrame, k: Int): DataFrame = {
-    val tf = tfIn.localCheckpoint(eager = false)
+    val tf = tfIn.localCheckpoint()
     val df = tf.groupBy("token").agg(count(lit(1)).as("df"))
     val idf = (col("n").cast("double") - col("df").cast("double") + lit(0.5)) /
       (col("df").cast("double") + lit(0.5))
@@ -693,7 +693,7 @@ object SearchQueries {
       // Σtf per (doc, field), doc count and df are distinct counts over
       // the pinned sliver. Three corpus scans collapsed to one.
       val ftf = x.groupBy("doc_id", "token", "fld").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val fdl = ftf.groupBy("doc_id", "fld").agg(sum("tf").cast("long").as("dl"))
       val favg = fdl.groupBy("fld")
         .agg(sum("dl").cast("long").as("total"), count(lit(1)).as("nd"))
@@ -767,7 +767,7 @@ object SearchQueries {
       import s.implicits._
       val v = SketchQueries.tokenVocab(TextQueries.spread(documents(s, d)))
         .withColumnRenamed("cnt", "freq")
-        .localCheckpoint(eager = false) // feeds the key table AND the freq join
+        .localCheckpoint() // feeds the key table AND the freq join
       def keysOf(df: DataFrame, cn: String) = df
         .select(col(cn), explode(sequence(lit(1), length(col(cn)) + 1)).as("i"))
         .select(col(cn),
@@ -1082,7 +1082,7 @@ object SearchQueries {
       // the bounded query-term table feeds FOUR consumers (round-1
       // vocab prune + rank, candidate anti-join, round-2 union) — pin
       // it once so the eval slice of documents is scanned exactly once
-      val qt = queryTerms(docs).localCheckpoint(eager = false)
+      val qt = queryTerms(docs).localCheckpoint()
       val corpusLens = doclens.filter(col("doc_id") % 97 =!= 0)
       val stats = corpusLens.agg(
         count(lit(1)).as("n"), sum("dl").cast("long").as("total"))
@@ -1110,7 +1110,7 @@ object SearchQueries {
         .select("qid", "token")
       // pinning the expanded query set severs round 2's plan from the
       // whole round-1 retrieval subtree (round 2 re-executes nothing)
-      val qt2 = qt.unionByName(expansion).localCheckpoint(eager = false)
+      val qt2 = qt.unionByName(expansion).localCheckpoint()
 
       val tf2 = corpusPostings
         .join(broadcast(qt2.select("token").distinct()), Seq("token"), "left_semi")
@@ -1174,7 +1174,7 @@ object SearchQueries {
         |ORDER BY doc_id, token""".stripMargin) { (s, d) =>
       val (postings, doclens) = SignatureStore.ensureBm25(s, d)
       val n1 = doclens.agg(count(lit(1)).as("n"))
-      val tf = postings.select("doc_id", "token", "tf").localCheckpoint(eager = false)
+      val tf = postings.select("doc_id", "token", "tf").localCheckpoint()
       val df = tf.groupBy("token").agg(count(lit(1)).as("df"))
       val idf = (col("n").cast("double") - col("df").cast("double") + lit(0.5)) /
         (col("df").cast("double") + lit(0.5))
@@ -1211,7 +1211,7 @@ object SearchQueries {
       val tf = postings.filter(col("doc_id") % 97 =!= 0)
         .join(broadcast(seeds.select("token").distinct()), Seq("token"), "left_semi")
         .select("doc_id", "token", "tf")
-        .localCheckpoint(eager = false) // feeds df AND the contribution join
+        .localCheckpoint() // feeds df AND the contribution join
       val df = tf.groupBy("token").agg(count(lit(1)).as("df"))
       val idf = (col("n").cast("double") - col("df").cast("double") + lit(0.5)) /
         (col("df").cast("double") + lit(0.5))
@@ -1265,7 +1265,7 @@ object SearchQueries {
       val tf = postings.filter(col("doc_id") % 97 =!= 0)
         .join(broadcast(qp0.select("token").distinct()), Seq("token"), "left_semi")
         .select("doc_id", "token", "tf")
-        .localCheckpoint(eager = false) // feeds cf, candidates, and the tf join
+        .localCheckpoint() // feeds cf, candidates, and the tf join
       val cf = tf.groupBy("token").agg(sum("tf").cast("long").as("cf"))
       // drop OOV query terms (cf = 0 ⇒ p ≡ 0 for every doc)
       val qp = qp0.join(broadcast(cf), Seq("token"))
@@ -1361,13 +1361,13 @@ object SearchQueries {
           Window.partitionBy("doc_id").orderBy("i")))
         .filter(col("stop") === 0)
         .select("doc_id", "run_id", "i", "token")
-        .localCheckpoint(eager = false) // feeds phrases, word stats, and the score join
+        .localCheckpoint() // feeds phrases, word stats, and the score join
       val phv = member.groupBy("doc_id", "run_id")
         .agg(expr("array_join(transform(array_sort(collect_list(struct(i, token))), " +
           "s -> s.token), ' ')").as("phrase"),
           count(lit(1)).as("plen"))
         .filter(col("plen") <= 4)
-        .localCheckpoint(eager = false) // feeds wsc and psc
+        .localCheckpoint() // feeds wsc and psc
       val wsc = member.join(phv.select("doc_id", "run_id", "plen"),
           Seq("doc_id", "run_id"))
         .groupBy("token")
@@ -1413,7 +1413,7 @@ object SearchQueries {
       // bounded: the top documents only — re-tokenize just those
       val docTk = docs.join(top.select("doc_id").distinct(), Seq("doc_id"), "left_semi")
         .select(col("doc_id"), graft.functions.WsTokens.ws_tokens(col("text")).as("tk"))
-        .localCheckpoint(eager = false) // positions + the final snippet slice share it
+        .localCheckpoint() // positions + the final snippet slice share it
       val posTok = docTk
         .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
           posexplode(col("tk")))
@@ -1425,7 +1425,7 @@ object SearchQueries {
           coalesce(col("hit"), lit(0L)).as("hit"))
       val cum = hits.withColumn("cum", sum("hit").over(
           Window.partitionBy("qid", "doc_id").orderBy("p")))
-        .localCheckpoint(eager = false) // both sides of the window join
+        .localCheckpoint() // both sides of the window join
       val a = cum.filter(col("p") <= col("dl") - 9)
         .select(col("qid"), col("doc_id"), col("p"), col("hit"), col("cum").as("ca"))
       val b = cum.select(col("qid"), col("doc_id"), (col("p") - 9).as("p"),
@@ -1449,7 +1449,7 @@ object SearchQueries {
     * read — postings rows are distinct per (doc, token) by
     * construction), `qt` the bounded (qid, token) query-term table. */
   private def boolRank(ct: DataFrame, qt: DataFrame, k: Int): DataFrame = {
-    val qtP = qt.localCheckpoint(eager = false) // feeds both m and the match join
+    val qtP = qt.localCheckpoint() // feeds both m and the match join
     val m = qtP.groupBy("qid").agg(count(lit(1)).as("m"))
     val rn = Window.partitionBy(col("qid")).orderBy(col("doc_id"))
     broadcast(qtP).join(ct, Seq("token"))

@@ -350,7 +350,7 @@ object SketchQueries {
     "count_min_tokens" -> QueryDef.sql(CountMinSql) { (s, d) =>
       // one corpus explode, pinned: both the cells and the audit read
       // the checkpointed vocab, never the corpus again
-      val vocab = tokenVocab(documents(s, d)).localCheckpoint(eager = false)
+      val vocab = tokenVocab(documents(s, d)).localCheckpoint()
       countMinReport(countMinCells(vocab), vocab)
     },
 
@@ -441,7 +441,7 @@ object SketchQueries {
       val sv = documents(s, d).filter(col("source").isNotNull)
         .select(col("source"), explode(expr(TextQueries.toksExpr)).as("t"))
         .groupBy("source", "t").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val js = (0 until CmDepth).map(lit(_))
       // per-source sketches materialized as real cell tables FIRST,
       // then summed — the actual merge operation, not an algebraic
@@ -478,7 +478,7 @@ object SketchQueries {
     "heavy_hitters_mg" -> QueryDef.sql(HeavyHittersSql) { (s, d) =>
       // one corpus pass: the per-(source, token) fold feeds the
       // summaries, their λs, and the exact audit
-      val v = sourceTokenCounts(documents(s, d)).localCheckpoint(eager = false)
+      val v = sourceTokenCounts(documents(s, d)).localCheckpoint()
       val (counters, lambdas) = mgSummaries(v)
       mgReport(counters, lambdas, v)
     },
@@ -534,7 +534,7 @@ object SketchQueries {
     // row. Probe joins are broadcast hash joins on the word id.
     "bloom_decontaminate" -> QueryDef.sql(BloomDecontamSql) { (s, d) =>
       // constant-size filter: ≤128 words regardless of eval size
-      val bloom = bloomOf(evalSplit(documents(s, d))).localCheckpoint(eager = false)
+      val bloom = bloomOf(evalSplit(documents(s, d))).localCheckpoint()
       bloomDecontamReport(s, d, bloom)
     },
 
@@ -678,8 +678,8 @@ object SketchQueries {
       val esh = evalSplit(docs)
         .select(explode(shingle_hashes(col("text"), lit(12))).as("h"))
         .distinct()
-        .localCheckpoint(eager = false) // filter build + anti-join probe share it
-      val bloom = bloomWords(esh).localCheckpoint(eager = false)
+        .localCheckpoint() // filter build + anti-join probe share it
+      val bloom = bloomWords(esh).localCheckpoint()
       val occ = bloom.agg(sum(expr("bit_count(bits)")).as("set_bits"))
       val tneg = TextQueries.spread(docs.filter(col("doc_id") % 97 =!= 0))
         .select(explode(shingle_hashes(col("text"), lit(12))).as("h"))
@@ -762,9 +762,9 @@ object SketchQueries {
         |ORDER BY abs(e.est_delta) DESC, e.t LIMIT 20""".stripMargin) { (s, d) =>
       val docs = documents(s, d)
       val va = tokenVocab(TextQueries.spread(docs.filter(col("doc_id") % 2 === 0)))
-        .localCheckpoint(eager = false) // cells + candidates + exact share it
+        .localCheckpoint() // cells + candidates + exact share it
       val vb = tokenVocab(TextQueries.spread(docs.filter(col("doc_id") % 2 === 1)))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val sa = countMinCells(va).toDF("j", "slot", "na")
       val sb = countMinCells(vb).toDF("j", "slot", "nb")
       val dd = sa.join(sb, Seq("j", "slot"), "full_outer")
@@ -834,8 +834,8 @@ object SketchQueries {
         .agg(count(lit(1)).as("cnt"))
       // the per-key folds are key-cardinality (not event-cardinality)
       // and feed both the sketch and the exact legs — pinned once each
-      val va = vocabOf("view").localCheckpoint(eager = false)
-      val vb = vocabOf("purchase").localCheckpoint(eager = false)
+      val va = vocabOf("view").localCheckpoint()
+      val vb = vocabOf("purchase").localCheckpoint()
       val estJ = countMinCells(va).withColumnRenamed("n", "na")
         .join(countMinCells(vb).withColumnRenamed("n", "nb"), Seq("j", "slot"))
         .groupBy("j")
@@ -955,7 +955,7 @@ object SketchQueries {
       val va = side("view").groupBy("u").agg(count(lit(1)).as("ca"))
       val vb = side("purchase").groupBy("u").agg(count(lit(1)).as("cb"))
       // one key-keyed join feeds the exact audit AND every key-sample m
-      val joined = va.join(vb, "u").localCheckpoint(eager = false)
+      val joined = va.join(vb, "u").localCheckpoint()
       val exact = joined
         .agg(expr("CAST(sum(CAST(ca AS DECIMAL(38,0)) * cb) AS BIGINT)").as("n_exact"))
       val keyEst = joined.withColumn("h", h60(col("u")))
@@ -1041,7 +1041,7 @@ object SketchQueries {
         .select(col("source"),
           graft.functions.Md5Head60.md5_head60(col("t")).as("h"))
         .distinct()
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val skW = Window.partitionBy(col("source")).orderBy(col("h"))
       val sk = h.withColumn("rk", row_number().over(skW))
         .filter(col("rk") <= KmvK).select("source", "h")
@@ -1452,7 +1452,7 @@ object SketchQueries {
       val h = hllHashes(
           events(s, d).select(col("event_type").as("stratum"), col("user_id")))
         .withColumnRenamed("stratum", "event_type")
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val tp = h.select("event_type").distinct()
       val pairs = tp.as("a").join(tp.as("b"),
           col("a.event_type") < col("b.event_type"))
@@ -1460,7 +1460,7 @@ object SketchQueries {
       val b = h.groupBy(col("event_type"), pmod(col("h"), lit(HllM)).as("idx"))
         .agg(max(expr(s"CASE WHEN h div $HllM = 0 THEN 53 " +
           s"ELSE 53 - length(bin(h div $HllM)) END")).as("m"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       def sFold(df: org.apache.spark.sql.DataFrame, keys: Seq[String]) =
         df.groupBy(keys.map(col): _*)
           .agg((sum(expr("shiftleft(1L, cast(53 - m as int))"))

@@ -157,7 +157,7 @@ object TextQueries {
       .select("doc_id", "sig", "band", "key")
       // localCheckpoint: the banded self-join consumes `bands` twice — on
       // the live path that would re-run the whole vote aggregation per side.
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val a = bands.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"), col("band"), col("key"))
     val b = bands.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"), col("band"), col("key"))
     a.join(b, Seq("band", "key")).filter(col("doc_a") < col("doc_b"))
@@ -339,9 +339,9 @@ object TextQueries {
     val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .unionByName(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
       .repartition(col("a"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     var labels = edges.select(col("a").as("doc_id")).distinct()
-      .withColumn("cluster_id", col("doc_id")).localCheckpoint(eager = false)
+      .withColumn("cluster_id", col("doc_id")).localCheckpoint()
     var changed = 1L
     while (changed > 0) {
       val propagated = edges.join(labels, edges("a") === labels("doc_id"))
@@ -361,13 +361,6 @@ object TextQueries {
         .join(labels.select(col("doc_id").as("via"), col("cluster_id").as("cand")),
           Seq("via"))
         .select(col("doc_id"), col("cand"), lit(null).cast("long").as("prev"))
-      // LAZY checkpoint + count in ONE job (r15): the former eager
-      // checkpoint ran a materialization job and then a second job for
-      // the convergence count over the pinned blocks — 2 sequential
-      // driver rounds per fixpoint round. A lazy local checkpoint is
-      // materialized BY the count (computing a checkpoint-marked
-      // partition pins it), so the count is the barrier and the blocks
-      // are pinned for the next round exactly as before.
       val merged = labels
         .select(col("doc_id"), col("cluster_id").as("cand"), col("cluster_id").as("prev"))
         .unionByName(propagated)
@@ -440,7 +433,7 @@ object TextQueries {
     * duplicate-gram aggregate and the flagging semi-join both consume
     * it. */
   def substringSpans(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    spansFromGrams(positionedGrams8(docs).localCheckpoint(eager = false))
+    spansFromGrams(positionedGrams8(docs).localCheckpoint())
 
   /** Excision of [[substringSpans]]-shaped spans from `docs`: keep only
     * tokens outside every span, report (n_kept, n_removed, md5 of the
@@ -717,7 +710,7 @@ object TextQueries {
         graft.functions.NgramSetStats.ngram_set_stats(col("text")).as("st"))
       .select(col("doc_id"), col("st.shs").as("shs"),
         col("st.s1").as("s1"), col("st.s2").as("s2"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val cand = docSets.select(col("doc_id").as("doc_a"), col("s1"), col("s2"))
       .join(docSets.select(col("doc_id").as("doc_b"), col("s1"), col("s2")), Seq("s1", "s2"))
       .filter(col("doc_a") < col("doc_b")).select("doc_a", "doc_b")
@@ -891,7 +884,7 @@ object TextQueries {
       val sig = spread(documents(s, d).filter(col("text").isNotNull))
         .select(col("doc_id"),
           graft.functions.MinShingleMd5.min_shingle_md5(col("text")).as("sig"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       sigSelfJoinPairs(sig).orderBy("doc_a", "doc_b")
     },
 
@@ -905,7 +898,7 @@ object TextQueries {
       // agg, anti-join, both join sides), and this path derives the bands
       // from a full text re-hash — materialize that once. The stored
       // variant reads parquet instead and needs no checkpoint.
-      bandedPairs(minhashBandsOf(documents(s, d)).localCheckpoint(eager = false))
+      bandedPairs(minhashBandsOf(documents(s, d)).localCheckpoint())
         .orderBy("doc_a", "doc_b")
     },
 
@@ -969,7 +962,7 @@ object TextQueries {
       // live leg: the OPH signature pass + pair enumeration is what this
       // query times; the k8 comparison side reads the pair store
       ophAgreement(
-        bandedPairs(ophBandsOf(documents(s, d)).localCheckpoint(eager = false)),
+        bandedPairs(ophBandsOf(documents(s, d)).localCheckpoint()),
         SignatureStore.ensureK8Pairs(s, d))
         .orderBy("doc_a", "doc_b")
     },
@@ -1250,7 +1243,7 @@ object TextQueries {
         .select(col("doc_id"), col("u"))
         .join(lsh, Seq("doc_id"))
       val cell = labeled.groupBy("u", "v").agg(count(lit(1)).as("nij"))
-        .localCheckpoint(eager = false) // cluster-cardinality; feeds three sums
+        .localCheckpoint() // cluster-cardinality; feeds three sums
       val sums = cell.agg(sum("nij").as("n"),
         expr("sum(nij * (nij - 1)) div 2").as("p_both"))
       val pa = cell.groupBy("u").agg(sum("nij").as("na"))
@@ -2167,10 +2160,10 @@ object TextQueries {
         |ORDER BY lift_ppm DESC, w1, w2 LIMIT 20""".stripMargin) { (s, d) =>
       val t = spread(documents(s, d))
         .withColumn("toks", expr(toksExpr))
-        .localCheckpoint(eager = false) // two consumers: bigram and unigram counts
+        .localCheckpoint() // two consumers: bigram and unigram counts
       val uni = t.select(explode(col("toks")).as("w"))
         .groupBy("w").agg(count(lit(1)).as("c"))
-        .localCheckpoint(eager = false) // three consumers: two join sides + the total
+        .localCheckpoint() // three consumers: two join sides + the total
       val tot = uni.agg(sum("c").cast("long").as("nn"))
       val bgc = t
         .select(col("toks"), size(col("toks")).cast("long").as("n"))
@@ -2180,7 +2173,6 @@ object TextQueries {
           element_at(col("toks"), (col("k") + 1).cast("int")).as("w2"))
         .groupBy("w1", "w2").agg(count(lit(1)).as("c_ab"))
         .filter(col("c_ab") >= 5)
-        .localCheckpoint(eager = false) // two consumers: the join and the bigram total
       // btot must sum over ALL bigrams (pre-filter would change p(ab))…
       val btot = t
         .select((size(col("toks")) - 1).cast("long").as("m"))
@@ -2660,7 +2652,7 @@ object TextQueries {
         .select(col("source"),
           explode(graft.functions.CharCounts.char_counts(col("text"))))
         .groupBy(col("source"), col("key").as("c")).agg(sum("value").as("n"))
-        .localCheckpoint(eager = false) // totals + log cells share the fold
+        .localCheckpoint() // totals + log cells share the fold
       val ns = cc.groupBy("source").agg(sum("n").as("nt"))
       val lg = cc.select(col("source"), col("n"),
         expr("CAST(round(1000000 * round(ln(CAST(n AS DOUBLE)), 6)) AS BIGINT)")
@@ -2740,7 +2732,7 @@ object TextQueries {
          |      // (coalesce(pp, 0) + coalesce(rr, 0)) END AS BIGINT) AS f1_ppm
          |FROM pr ORDER BY lang""".stripMargin) { (s, d) =>
       val cm = nbConfusion(documents(s, d))
-        .localCheckpoint(eager = false) // bounded langs² rows feed three margins
+        .localCheckpoint() // bounded langs² rows feed three margins
       val rowt = cm.groupBy(col("true_lang").as("lang"))
         .agg(sum("n").as("t"))
       val colp = cm.groupBy(col("pred_lang").as("lang"))
@@ -2879,7 +2871,7 @@ object TextQueries {
       val tr = tok.filter(col("doc_id") % 10 < 8)
       val te = tok.filter(col("doc_id") % 10 >= 8)
       val cell = tr.groupBy("lang", "t").agg(count(lit(1)).as("c"))
-        .localCheckpoint(eager = false) // likelihoods + per-lang totals share it
+        .localCheckpoint() // likelihoods + per-lang totals share it
       val tl = cell.groupBy("lang").agg(sum("c").as("total"))
       val vsz = tr.agg(countDistinct("t").as("vsz"))
       val mll = cell.join(broadcast(tl), Seq("lang"))

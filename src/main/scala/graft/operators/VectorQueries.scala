@@ -1024,7 +1024,7 @@ object VectorQueries {
           round(lit(1000000) * col("fa").cast("double")).cast("long").as("ma"),
           round(lit(1000000) * element_at(col("vb"), col("i") + 1)
             .cast("double")).cast("long").as("mb"))
-        .localCheckpoint(eager = false) // probe-pair-bounded; feeds both distance legs
+        .localCheckpoint() // probe-pair-bounded; feeds both distance legs
       val od = dims.groupBy("ida", "idb")
         .agg(sum((col("ma") - col("mb")) * (col("ma") - col("mb")))
           .as("orig_d2"))
@@ -1113,7 +1113,7 @@ object VectorQueries {
         s, d, () => ivfAssign(e, centroids))
       val occ = assign.groupBy("cent_id")
         .agg(count(lit(1)).as("n_vecs"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       occ.crossJoin(broadcast(occ.agg(sum("n_vecs").as("total"))))
         .select(col("cent_id"), col("n_vecs"),
           expr("(1000000L * n_vecs) div total").as("share_ppm"))
@@ -1295,7 +1295,7 @@ object VectorQueries {
       // assigned-and-armed table twice; without it the broadcast
       // assignment aggregate would run once per side.
       val assigned = ivfAssign(e, centroids).join(e, Seq("vec_id"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       val a = assigned.select(col("cent_id"), col("vec_id").as("vec_a"),
         col("embedding").as("va"))
       val b = assigned.select(col("cent_id"), col("vec_id").as("vec_b"),
@@ -1613,7 +1613,7 @@ object VectorQueries {
             * lit(1000000.0)).as("mu_x1e6"))
         .select(col("gid"), (col("pos0") + 1).cast("int").as("pos"),
           col("n_chunks"), col("mu_x1e6"))
-        .localCheckpoint(eager = false) // two consumers: the norm aggregate and the join
+        .localCheckpoint() // two consumers: the norm aggregate and the join
       // the scaled means are exact BIGINTs, so the squared-norm sum is
       // pure integer arithmetic (≤64·(1e7)² ≪ 2^63) — order-free without
       // the DECIMAL detour, and unit = mu_x1e6/sqrt(ss) since the 1e6
@@ -2037,8 +2037,8 @@ object VectorQueries {
     // after; all-integer emissions.
     "ann_matryoshka_recall" -> QueryDef.sql(MatryoshkaSql) { (s, d) =>
       val e = embeddings(s, d).select(col("vec_id"), col("embedding"))
-        .localCheckpoint(eager = false)
-      val truth = truncatedTop10(e, 64).localCheckpoint(eager = false)
+        .localCheckpoint()
+      val truth = truncatedTop10(e, 64).localCheckpoint()
       val tiers = Seq(16, 32, 64).map { dim =>
         truth.as("b").join(truncatedTop10(e, dim).as("t"),
             col("b.qid") === col("t.qid") && col("b.cid") === col("t.cid"),
@@ -2245,10 +2245,7 @@ object VectorQueries {
       .filter(col("sx") + col("sy") > 0 && col("c") > 0)
       .select(col("xid"), col("yid"), col("c"),
         expr(s"(${2 * k}000000L * c) div (sx + sy)").as("m"))
-      // lazy: fwd/bwd are sequential consumers inside the final action —
-      // the first window pass pins it (c/rx/ry above stay EAGER: they
-      // feed Scale.inParallel legs, where lazy would race-compute)
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val wf = Window.partitionBy(col("xid")).orderBy(col("m").desc, col("yid"))
     val wb = Window.partitionBy(col("yid")).orderBy(col("m").desc, col("xid"))
     val fwd = m.withColumn("rn", row_number().over(wf)).filter(col("rn") === 1)
@@ -2549,5 +2546,5 @@ object LshPlanes {
     * consumer. */
   def bandedCandidates(e: org.apache.spark.sql.DataFrame,
       maxBucket: Int = graft.operators.TextQueries.DefaultMaxBucket): org.apache.spark.sql.DataFrame =
-    candidatesFromBands(bandsOf(e).localCheckpoint(eager = false), maxBucket)
+    candidatesFromBands(bandsOf(e).localCheckpoint(), maxBucket)
 }

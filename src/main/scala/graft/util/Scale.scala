@@ -55,9 +55,6 @@ object Scale {
     val parts = df.sparkSession.sparkContext.defaultParallelism
     val ranged = df.repartitionByRange(parts, sortExprs: _*)
       .withColumn("_pid", spark_partition_id())
-      // lazy: the totals collect below is the first compute and pins the
-      // blocks (one job instead of checkpoint-then-collect); the caller's
-      // window pass reads the same pinned partitioning either way
       .localCheckpoint(eager = false)
     // coalesce: a partition whose weights are all null must count as 0,
     // not NPE on getLong.
